@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .assign import assign_tiles
 from .components import connected_components
+from .fixpoint import checkpoint_count
 
 # cluster_points broadcast guard: dense-cell relations above this row
 # count join by shuffle instead of broadcast (3 longs/row ⇒ the default
@@ -136,9 +137,8 @@ def cluster_points(points: DataFrame, id_col: str, lon_col: str,
     # materialize the label relation once, broadcast only when it is
     # provably small, otherwise fall back to a plain shuffled join on
     # the tile key.
-    labels = labelled.select("tile_x", "tile_y", "cluster") \
-        .localCheckpoint(eager=True)
-    if labels.count() <= CLUSTER_BROADCAST_MAX_CELLS:
+    labels, n = checkpoint_count(labelled.select("tile_x", "tile_y", "cluster"))
+    if n <= CLUSTER_BROADCAST_MAX_CELLS:
         labels = F.broadcast(labels)
     return cells.join(
         labels, ["tile_x", "tile_y"], "left",

@@ -19,8 +19,8 @@ rather than silently emitting split components.
 
 Scale shape: per round, one shuffle join edges⋈labels + one aggregate
 + one labels⋈labels self-join — all equi-joins on the id key, no
-driver-side state; lineage truncated per round via localCheckpoint
-(same pattern as the semi-naive relation fixed point).
+driver-side state; lineage truncated per round via localCheckpoint,
+whose job also counts the changed labels (``fixpoint``).
 """
 
 from __future__ import annotations
@@ -30,10 +30,12 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fixpoint import checkpoint_count, fixpoint
+
 # driver fast path cap: pair relations at or below this many edges are
 # collected and resolved with a single union-find instead of the
-# distributed fixpoint (each distributed round costs 3 checkpoint jobs
-# + an isEmpty probe — seconds of pure scheduling latency on small
+# distributed fixpoint (each distributed round costs 2 checkpoint jobs
+# — seconds of pure scheduling latency on small
 # graphs).  2M edges ≈ 32 MB via Arrow — the same bounded-collect class
 # as the IVF probe-cell ids; larger graphs take the distributed path
 # unchanged, so the operator stays 100 TB-safe.
@@ -46,7 +48,7 @@ def _driver_components(spark, pdf, id_fields) -> DataFrame:
     fixpoint, differentially tested in tests/test_components.py)."""
     import pandas as pd
 
-    codes_a, uniq = pd.factorize(pd.concat([pdf["id_a"], pdf["id_b"]]))
+    codes, uniq = pd.factorize(pd.concat([pdf["id_a"], pdf["id_b"]]))
     n_pairs = len(pdf)
     parent = list(range(len(uniq)))
 
@@ -56,26 +58,19 @@ def _driver_components(spark, pdf, id_fields) -> DataFrame:
             a = parent[a]
         return a
 
-    for a, b in zip(codes_a[:n_pairs], codes_a[n_pairs:]):
+    for a, b in zip(codes[:n_pairs], codes[n_pairs:]):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[rb] = ra
-    roots = [find(i) for i in range(len(uniq))]
-    comp_min: dict[int, object] = {}
-    for i, r in enumerate(roots):
-        v = uniq[i]
-        if r not in comp_min or v < comp_min[r]:
-            comp_min[r] = v
-    rows = [(uniq[i].item() if hasattr(uniq[i], "item") else uniq[i],
-             comp_min[roots[i]].item() if hasattr(comp_min[roots[i]], "item")
-             else comp_min[roots[i]]) for i in range(len(uniq))]
+    ids = pd.Series(uniq)
+    comp = ids.groupby([find(i) for i in range(len(uniq))]).transform("min")
     from pyspark.sql import types as T
 
     schema = T.StructType([
         T.StructField("v", id_fields, False),
         T.StructField("component", id_fields, False),
     ])
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(list(zip(ids.tolist(), comp.tolist())), schema)
 
 
 def connected_components(pairs: DataFrame, max_iters: int = 20,
@@ -83,7 +78,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
     """→ (v, component) for every vertex appearing in ``pairs``
     (columns id_a/id_b), component = MIN vertex id reachable.
 
-    Size-adaptive (r6): the pair relation is materialized once; at or
+    Size-adaptive (r6): one job materializes and counts the pairs; at or
     below ``driver_max_edges`` (default ``CC_DRIVER_MAX_EDGES``) the
     graph resolves in one driver union-find — dedup-pair graphs after
     banding are tiny relative to the corpus, and the distributed
@@ -97,10 +92,8 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
     groups, so like the relation fixed point the failure is loud)."""
     cap = CC_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
     if cap > 0:
-        pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-        # count is cheap on the materialized blocks; limit(cap+1) would
-        # also work but count doubles as telemetry
-        if pairs.count() <= cap:
+        pairs, n = checkpoint_count(pairs.select("id_a", "id_b"))
+        if n <= cap:
             id_type = pairs.schema["id_a"].dataType
             return _driver_components(
                 pairs.sparkSession, pairs.toPandas(), id_type)
@@ -118,15 +111,19 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         )
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iters):
+
+    def step(labels):
         # min over neighbours' current labels
         nb = (
             edges.join(labels, edges["dst"] == labels["v"])
             .groupBy("src").agg(F.min("lab").alias("nlab"))
         )
+        # a left join from labels (v unique) keeps one row per vertex,
+        # so counting lab != old below counts the vertices that changed
         stepped = (
             labels.join(nb, labels["v"] == nb["src"], "left")
-            .select(labels["v"], F.least("lab", "nlab").alias("lab"))
+            .select(labels["v"], labels["lab"].alias("old"),
+                    F.least("lab", "nlab").alias("lab"))
             # materialize before the x/y self-join below: an uncheckpointed
             # plan aliased as both sides would recompute the edges⋈labels
             # join + aggregate twice per round (2× every iteration)
@@ -134,26 +131,18 @@ def connected_components(pairs: DataFrame, max_iters: int = 20,
         )
         # pointer jumping: follow the label's own label (path doubling)
         x, y = stepped.alias("x"), stepped.alias("y")
-        jumped = (
+        return checkpoint_count(
             x.join(y, F.col("x.lab") == F.col("y.v"), "left")
             .select(
                 F.col("x.v").alias("v"),
+                F.col("x.old").alias("old"),
                 F.least(F.col("x.lab"), F.col("y.lab")).alias("lab"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.col("lab") != F.col("old"),
         )
-        changed = (
-            jumped.join(labels.withColumnRenamed("lab", "old"), "v")
-            .filter(F.col("lab") != F.col("old"))
-        )
-        done = changed.isEmpty()
-        labels = jumped
-        if done:
-            return labels.select("v", F.col("lab").alias("component"))
-    raise RuntimeError(
-        f"connected_components: not converged after {max_iters} rounds — "
-        "pathological chain graph; raise max_iters"
-    )
+
+    labels = fixpoint(step, labels, max_iters, "connected_components")
+    return labels.select("v", F.col("lab").alias("component"))
 
 
 def dedup_keep(docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",

@@ -33,12 +33,15 @@ Scale-correctness details of the tiled path:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import sqlgen
 from .assign import assign_tiles
+from .fixpoint import checkpoint_count
 
 EARTH_R_KM = 6371.0088  # matches sqlgen.haversine_sql
 _FAR_KM = 1.0e9  # "side fully covered" sentinel (wraps / poles)
@@ -110,14 +113,16 @@ def _ring_tiles(qt: DataFrame, zoom: int, ring: int,
     )
 
 
-def _ring_candidates(qt: DataFrame, points_tiled: DataFrame, zoom: int,
-                     ring: int) -> DataFrame:
-    """Query ring tiles ⋈ tiled points.
-    → (query_id, q_lon, q_lat, point_id, p_lon, p_lat)."""
+def _ring_level(qt: DataFrame, points_tiled: DataFrame, zoom: int,
+                ring: int, k: int) -> tuple[DataFrame, DataFrame]:
+    """One quadtree ladder level: query ring tiles ⋈ tiled points, exact
+    re-rank → (ranked, per-query coverage radius)."""
     ringed = _ring_tiles(qt, zoom, ring, ["query_id", "q_lon", "q_lat"])
-    return F.broadcast(ringed).join(points_tiled, ["tile_x", "tile_y"]).select(
+    cands = F.broadcast(ringed).join(points_tiled, ["tile_x", "tile_y"]).select(
         "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
     )
+    ranked = _ranked(cands.dropDuplicates(["query_id", "point_id"]), k)
+    return ranked, _coverage_radius_km(qt, zoom, ring)
 
 
 def _coverage_radius_km(qt: DataFrame, zoom: int, ring: int) -> DataFrame:
@@ -175,6 +180,31 @@ def _proven(ranked: DataFrame, coverage: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _ladder(queries: DataFrame, levels, probe, points: DataFrame, k: int,
+            escalate: bool) -> DataFrame:
+    """The coverage-proof ladder of every kNN path: ``probe(pending,
+    level) -> (ranked, coverage)``; provably covered queries are
+    accepted, the rest escalate to the next level, then brute force
+    against ``points``.  One job checkpoints and counts the pending set
+    (``checkpoint_count``).  ``escalate=False``: first level, lazily."""
+    pending = queries.select("query_id", "q_lon", "q_lat")
+    results: list[DataFrame] = []
+    for level in levels:
+        ranked, coverage = probe(pending, level)
+        if not escalate:
+            return ranked
+        ranked = ranked.localCheckpoint(eager=True)  # reused 3× below
+        proven = _proven(ranked, coverage, k)
+        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
+        pending, n = checkpoint_count(
+            pending.join(F.broadcast(proven), "query_id", "left_anti"))
+        if n == 0:
+            break
+    else:
+        results.append(knn_bruteforce(pending, points, k))
+    return reduce(DataFrame.unionByName, results)
+
+
 def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
               k: int = 5, escalate: bool = True, min_zoom: int = 0) -> DataFrame:
     """Tile-ring candidate generation + exact haversine re-rank.
@@ -194,41 +224,23 @@ def knn_tiled(queries: DataFrame, points: DataFrame, zoom: int, ring: int = 1,
 
     NOTE: ``escalate=True`` executes Spark jobs EAGERLY at call time
     (the per-level accept/retry decision needs each level's coverage
-    proof — eager localCheckpoint + isEmpty per zoom), unlike the lazy
+    proof — two checkpoint jobs per zoom, see ``_ladder``), unlike the lazy
     single-probe path.  The checkpointed intermediates backing the
     returned DataFrame are context-cleaned once the caller drops its
     reference (localCheckpoint blocks are GC-managed, not pinned).
     """
-    pending = queries.select("query_id", "q_lon", "q_lat")
-    results: list[DataFrame] = []
     # assign the big points side ONCE at the base zoom; coarser levels
     # derive by bit-shift (quadtree nesting: floor(v·2^(z−d)) ==
     # floor(v·2^z) >> d, clamping included) — escalation never rescans
     # or re-projects the points table
     pt_base = _tiled_points(points, zoom)
-    z = zoom
-    while z >= min_zoom:
-        pt_z = _coarsen_tiles(pt_base, zoom - z)
-        qt = _query_tiles(pending, z)
-        cands = _ring_candidates(qt, pt_z, z, ring)
-        ranked = _ranked(cands.dropDuplicates(["query_id", "point_id"]), k)
-        if not escalate:
-            return ranked
-        ranked = ranked.localCheckpoint(eager=True)  # reused 3× below
-        proven = _proven(ranked, _coverage_radius_km(qt, z, ring), k)
-        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
-        pending = pending.join(F.broadcast(proven), "query_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if pending.isEmpty():
-            break
-        z -= 1
-    else:
-        results.append(knn_bruteforce(pending, points, k))
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    def probe(pending, z):
+        qt = _query_tiles(pending, z)
+        return _ring_level(qt, _coarsen_tiles(pt_base, zoom - z), z, ring, k)
+
+    return _ladder(queries, range(zoom, min_zoom - 1, -1), probe, points,
+                   k, escalate)
 
 
 def _probe_buckets(spark, ringed: DataFrame, d: int, n_buckets: int) -> list[int] | None:
@@ -292,10 +304,8 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
     (quadtree nesting), never re-projecting the stored rows.
     """
     spark = queries.sparkSession
-    pending = queries.select("query_id", "q_lon", "q_lat")
-    results: list[DataFrame] = []
-    z = zoom
-    while z >= min_zoom:
+
+    def probe(pending, z):
         d = zoom - z
         qt = _query_tiles(pending, z)
         ringed = _ring_tiles(qt, z, ring, ["query_id"])
@@ -306,29 +316,11 @@ def knn_tiled_bucketed(queries: DataFrame, points_path: str, zoom: int,
         pt_z = _coarsen_tiles(
             pts.select("point_id", "p_lon", "p_lat", "tile_x", "tile_y"), d
         )
-        cands = _ring_candidates(qt, pt_z, z, ring)
-        ranked = _ranked(cands.dropDuplicates(["query_id", "point_id"]), k)
-        if not escalate:
-            return ranked
-        ranked = ranked.localCheckpoint(eager=True)
-        proven = _proven(ranked, _coverage_radius_km(qt, z, ring), k)
-        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
-        pending = pending.join(F.broadcast(proven), "query_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if pending.isEmpty():
-            break
-        z -= 1
-    else:
-        results.append(knn_bruteforce(
-            pending,
-            spark.read.parquet(points_path).select("point_id", "p_lon", "p_lat"),
-            k,
-        ))
+        return _ring_level(qt, pt_z, z, ring, k)
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    points = spark.read.parquet(points_path).select("point_id", "p_lon", "p_lat")
+    return _ladder(queries, range(zoom, min_zoom - 1, -1), probe, points,
+                   k, escalate)
 
 
 # ---------------------------------------------------------------------------
@@ -429,37 +421,22 @@ def knn_hex(queries: DataFrame, points: DataFrame, s_deg: float,
     brute force (sparse regions + the antimeridian seam, which the
     non-wrapping lattice never covers).
 
-    Like knn_tiled, ``escalate=True`` runs eagerly at call time (the
-    per-level accept decision needs each level's coverage proof).
+    On the same ``_ladder`` as knn_tiled: ``escalate=True`` runs eagerly
+    at call time (two checkpoint jobs per disk radius).
     """
     if k0 < 1:
         raise ValueError("k0 must be >= 1 (a 0-disk has no coverage proof)")
-    pending = queries.select("query_id", "q_lon", "q_lat")
     pt = _hex_assigned(points.select("point_id", "p_lon", "p_lat"),
                        "point_id", "p_lon", "p_lat", s_deg)
-    results: list[DataFrame] = []
-    kk = k0
-    while kk <= k_max:
+
+    def probe(pending, kk):
         qt = _hex_assigned(pending, "query_id", "q_lon", "q_lat", s_deg)
         cells = _hex_disk_cells(qt, kk, ["query_id", "q_lon", "q_lat"])
         cands = F.broadcast(cells).join(pt, ["hq", "hr"]).select(
             "query_id", "q_lon", "q_lat", "point_id", "p_lon", "p_lat"
         )
-        ranked = _ranked(cands, k)
-        if not escalate:
-            return ranked
-        ranked = ranked.localCheckpoint(eager=True)
-        proven = _proven(ranked, _hex_coverage_km(qt, kk, s_deg), k)
-        results.append(ranked.join(F.broadcast(proven), "query_id", "left_semi"))
-        pending = pending.join(F.broadcast(proven), "query_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if pending.isEmpty():
-            break
-        kk *= 2
-    else:
-        results.append(knn_bruteforce(pending, points, k))
+        return _ranked(cands, k), _hex_coverage_km(qt, kk, s_deg)
 
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    # disk radii k0, 2·k0, 4·k0, ... up to k_max
+    radii = [k0 << i for i in range((k_max // k0).bit_length())]
+    return _ladder(queries, radii, probe, points, k, escalate)

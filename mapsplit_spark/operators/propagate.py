@@ -11,8 +11,8 @@ bitmaps — Tungsten columnar rows replace AbstractOsmMap's 64-bit codec).
 Scale notes: node_tiles is the big side (≈ input cardinality × small
 fan-out); membership edges shuffle-join on member_id.  Both sides are
 key-partitioned by the join key only — no driver collection; the
-fixed-point loop (relations) iterates a bounded number of small joins
-on the relation subset only.
+fixed-point loops (relations, newer) iterate a bounded number of small
+joins on the relation subset only, one counted checkpoint per round.
 """
 
 from __future__ import annotations
@@ -20,18 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def drop_incomplete_groups(members: DataFrame, node_ids: DataFrame,
-                           group_col: str = "way_id",
-                           member_col: str = "member_id") -> DataFrame:
-    """P5 way semantics (MapSplit.java:468-473): a group with ANY member
-    missing from ``node_ids`` is dropped entirely.  Returns the surviving
-    membership edges.  node_ids: single-column DataFrame `element_id`."""
-    missing = (
-        members.join(node_ids, members[member_col] == node_ids["element_id"], "left_anti")
-        .select(group_col).distinct()
-    )
-    return members.join(missing, group_col, "left_anti")
+from .fixpoint import checkpoint_count, fixpoint
 
 
 def way_tiles(members: DataFrame, node_tiles: DataFrame,
@@ -120,6 +109,21 @@ def _semi_naive_step(rel_edges: DataFrame, delta: DataFrame,
     return derived.join(resolved, ["element_id", "tile_x", "tile_y"], "left_anti")
 
 
+def _closure(new_rows, acc: DataFrame, max_iters: int, what: str) -> DataFrame:
+    """Semi-naive closure of ``acc`` on ``fixpoint``: each round
+    checkpoints and counts ``new_rows(acc, delta)`` (the rows derived
+    from the last delta, minus those already in ``acc``) and folds a
+    nonempty delta into the checkpointed ``acc``."""
+    def step(state):
+        acc, delta = state
+        delta, n = checkpoint_count(new_rows(acc, delta))
+        if n:
+            acc = acc.union(delta).localCheckpoint(eager=True)
+        return (acc, delta), n
+
+    return fixpoint(step, (acc, acc), max_iters, what)[0]
+
+
 def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
                                group_col: str = "relation_id",
                                member_col: str = "member_id",
@@ -165,18 +169,8 @@ def relation_tiles_fixed_point(rel_members: DataFrame, base_tiles: DataFrame,
     # sf0.1) — the accumulated checkpoint is what keeps the per-round
     # anti-join and every downstream consumer reading one compact
     # materialized relation.  Kept the r5 shape.
-    delta = resolved
-    for _ in range(max_iters):
-        delta = _semi_naive_step(rel_edges, delta, resolved).localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return resolved
-        resolved = resolved.union(delta).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"relation fixed point did not converge within max_iters={max_iters} "
-        f"(relation nesting deeper than the cap — the reference iterates to "
-        f"no-progress, MapSplit.java:772-790; raise max_iters rather than "
-        f"accept a silently truncated tile set)"
-    )
+    return _closure(lambda acc, delta: _semi_naive_step(rel_edges, delta, acc),
+                    resolved, max_iters, "relation fixed point")
 
 
 def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
@@ -192,17 +186,12 @@ def propagate_newer(edges: DataFrame, newer_ids: DataFrame,
     single-column ``element_id``.  → distinct element_id superset.
     """
     newer = newer_ids.select("element_id").distinct().localCheckpoint(eager=True)
-    delta = newer
-    for _ in range(max_iters):
-        derived = (
+
+    def new_groups(newer, delta):
+        return (
             edges.join(delta, edges["member_id"] == delta["element_id"])
             .select(F.col("group_id").alias("element_id")).distinct()
+            .join(newer, "element_id", "left_anti")
         )
-        delta = derived.join(newer, "element_id", "left_anti") \
-            .localCheckpoint(eager=True)
-        if delta.isEmpty():
-            return newer
-        newer = newer.union(delta).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"newer-propagation did not converge within max_iters={max_iters}"
-    )
+
+    return _closure(new_groups, newer, max_iters, "newer-propagation")
